@@ -51,6 +51,9 @@ def get_spark(app_name: str = "habits_etl_spark", master: str | None = None,
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
+        # No console progress bars: they fill the stderr of every bench,
+        # tool and test run.
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
         .config(
             "spark.sql.warehouse.dir",

@@ -44,7 +44,9 @@ def write_events(events: DataFrame, path: str, mode: str = "overwrite") -> None:
     (
         events.withColumn("event_date", F.col("ts").cast("date"))
         .repartition("event_date")
-        .sortWithinPartitions("user_email", "habit", "ts")
+        # event_date first: otherwise the writer's own sort by the
+        # partition column replaces this one
+        .sortWithinPartitions("event_date", "user_email", "habit", "ts")
         .write.mode(mode)
         .partitionBy("event_date")
         .parquet(path)

@@ -3,6 +3,10 @@ re-runs') and upsert semantics (reference etl/etl_habits.py:31-38)."""
 
 from __future__ import annotations
 
+import datetime as dt
+import os
+
+import pyarrow.parquet as pq
 import pytest
 
 from habits_etl_spark.config import PipelineConfig
@@ -184,3 +188,103 @@ def test_upsert_keyed_duplicate_incoming_fans_out(spark):
     out = upsert_keyed(existing, incoming, ["k"], ["v"], ["notes"])
     rows = sorted((r.k, r.v, r.notes) for r in out.collect())
     assert rows == [("k1", "a", "keep"), ("k1", "b", "keep")]
+
+
+def _persisted_rdds(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+@pytest.mark.parametrize("later_row", ["removed", "blanked"])
+def test_whole_sheet_resend_reapplies_earlier_row(spark, wh, later_row):
+    """The reference re-applies every sheet row on every run. A day
+    re-submitted with new values, whose later row is then removed from the
+    sheet or has its cells blanked, gets the earlier row's values back:
+    the earlier row is upserted again and nothing later overrides it."""
+    first = ("08/20/2025", "a@x.com", "Yes", "8", None)
+    later = ("08/20/2025", "a@x.com", "No", "3", None)
+    run_ingest(spark, wide(spark, [first]), CFG, wh)
+    run_ingest(spark, wide(spark, [first, later]), CFG, wh)
+    assert {r[1]: r[3] for r in snapshot(spark, wh)} == {"workout": 0.0, "mood_score": 3.0}
+
+    if later_row == "removed":
+        resend = [first]
+    else:
+        resend = [first, ("08/20/2025", "a@x.com", "", "  ", None)]
+    run_ingest(spark, wide(spark, resend), CFG, wh)
+    assert {r[1]: r[3] for r in snapshot(spark, wh)} == {"workout": 1.0, "mood_score": 8.0}
+
+
+def test_resend_of_every_date_past_the_parallel_listing_threshold(spark, wh, tmp_path):
+    """A whole-sheet re-send over more date partitions than Spark lists
+    serially: the merged table equals a from-scratch ingest of the final
+    sheet, every date partition holds one file sorted by key, and no
+    cached batch outlives the call."""
+    days = [dt.date(2025, 6, 1) + dt.timedelta(days=d) for d in range(40)]
+    assert len(days) > int(spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold"))
+
+    def sheet(edit):
+        rows = [(d, u) for d in days for u in ("a@x.com", "b@x.com")]
+        return wide(
+            spark,
+            [
+                (f"{d:%m/%d/%Y}", u, "Yes" if (i + edit) % 2 else "No", str(i % 10 + edit), f"n{i}")
+                for i, (d, u) in enumerate(rows)
+            ],
+        )
+
+    before = _persisted_rdds(spark)
+    run_ingest(spark, sheet(0), CFG, wh)
+    run_ingest(spark, sheet(1), CFG, wh)
+    assert _persisted_rdds(spark) == before
+
+    fresh = str(tmp_path / "fresh")
+    run_ingest(spark, sheet(1), CFG, fresh)
+    assert snapshot(spark, wh) == snapshot(spark, fresh)
+
+    table = os.path.join(wh, "habit_events")
+    parts = [d for d in os.listdir(table) if d.startswith("event_date=")]
+    assert len(parts) == len(days)
+    for d in parts:
+        files = [f for f in os.listdir(os.path.join(table, d)) if f.endswith(".parquet")]
+        assert len(files) == 1, (d, files)
+        rows = pq.read_table(os.path.join(table, d, files[0])).to_pylist()
+        keys = [(r["user_email"], r["habit"], r["ts"]) for r in rows]
+        assert keys == sorted(keys), d  # the file keeps the key order
+
+
+@pytest.mark.parametrize("table_format", ["parquet", "manifest"])
+def test_ingest_leaves_no_persisted_storage(spark, wh, monkeypatch, table_format):
+    """run_ingest releases every batch it caches: after a first load, after
+    a merge, and when the merge raises."""
+    from habits_etl_spark import pipeline
+    from habits_etl_spark.sinks import upsert
+
+    before = _persisted_rdds(spark)
+    batch = wide(spark, [("08/20/2025", "a@x.com", "Yes", "8", None)])
+    run_ingest(spark, batch, CFG, wh, table_format=table_format)
+    run_ingest(spark, batch, CFG, wh, table_format=table_format)
+    assert _persisted_rdds(spark) == before
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("merge failed")
+
+    monkeypatch.setattr(pipeline, "upsert_keyed", boom)
+    monkeypatch.setattr(upsert, "upsert_keyed", boom)
+    with pytest.raises(RuntimeError, match="merge failed"):
+        run_ingest(spark, batch, CFG, wh, table_format=table_format)
+    assert _persisted_rdds(spark) == before
+
+
+def test_run_ingest_keeps_the_session_overwrite_mode(spark, wh):
+    """The dynamic partition overwrite is an option of run_ingest's own
+    write: a caller's later overwrite keeps the session's static mode."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "STATIC")
+    try:
+        run_ingest(spark, wide(spark, [("08/20/2025", "a@x.com", "Yes", "8", None)]), CFG, wh)
+        run_ingest(spark, wide(spark, [("08/21/2025", "a@x.com", "No", "1", None)]), CFG, wh)
+        assert spark.conf.get(key) == "STATIC"
+        assert len(snapshot(spark, wh)) == 4  # the second write kept the first day
+    finally:
+        spark.conf.set(key, prior)

@@ -152,3 +152,11 @@ def test_quantile_zorder_discriminates_skewed_hot_range(spark, tmp_path):
         f"discrimination bounds missed on all 3 attempts; last "
         f"(frac_uniform, frac_quantile, hot_u, hot_q) = {last}"
     )
+
+
+def test_zorder_of_an_empty_input_is_empty(spark):
+    from habits_etl_spark.sinks.zorder import zorder_by_quantile
+
+    empty = spark.range(0).select(F.col("id").alias("x"), F.col("id").alias("y"))
+    assert zorder_by(empty, "x", "y").count() == 0
+    assert zorder_by_quantile(empty, "x", "y").count() == 0
